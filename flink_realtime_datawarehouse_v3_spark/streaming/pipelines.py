@@ -117,7 +117,7 @@ def _write_replay(
     order_by: list[str] | None,
     sentinels=None,
     max_col: str | None = None,
-    n_files: int = N_FILES,
+    n_files: int | None = None,
 ) -> None:
     """Write ``df`` as ``n_files`` time-range MICRO-BATCH GROUPS of parquet
     files (+ optional sentinel rows, each as its own trailing micro-batch).
@@ -146,7 +146,11 @@ def _write_replay(
     ``max_value -> list[DataFrame]``; the callable form gets the max of
     ``max_col`` from the written files' footer stats, so sentinel
     construction costs no extra input scan.
+
+    ``n_files`` defaults to the module's ``N_FILES`` as it reads at call
+    time, so a caller can re-split every replay by setting it.
     """
+    n_files = n_files or N_FILES
     par = df.sparkSession.sparkContext.defaultParallelism
     fpb = max(1, min(8, par // n_files))  # files per micro-batch group
     total = n_files * fpb

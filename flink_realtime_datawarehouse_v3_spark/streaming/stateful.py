@@ -1,32 +1,45 @@
-"""Keyed-state streaming operators (SURVEY.md §2.6) via applyInPandasWithState.
+"""Keyed-state streaming operators (SURVEY.md §2.6) and the keyed upsert
+sinks.
 
-These are the true-streaming twins of the batch window-function forms in
-:mod:`..operators.dedup`; the batch forms are the oracle in stream==batch
-parity tests (tests/test_streaming.py).
+Six operators are one per-key function each over keyed state, run by
+the bucketed kernel :func:`_bucketed_keyed_state` on
+``applyInPandasWithState``:
 
-- :func:`first_per_day_stream` — D1 UV dedup: per-key ValueState of the
-  last emitted date (reference: RT/app/dwd/DwdTrafficUniqueVisitorDetail.java:76-105,
+- :func:`first_per_day_stream` — D1 UV dedup: the key's last emitted
+  date (reference: RT/app/dwd/DwdTrafficUniqueVisitorDetail.java:76-105,
   state TTL 1 day == daily rollover of the date value).
-- :func:`is_new_repair_stream` — P8 new-visitor flag repair: ValueState of
-  the first-visit date, backfilled to "old" for visitors first seen with
+- :func:`is_new_repair_stream` — P8 new-visitor flag repair: the key's
+  first-visit date, backfilled to "old" for visitors first seen with
   is_new=0 (reference: RT/app/dwd/BaseLogApp.java:76-105).
-- :func:`jump_detect_stream` — D5 CEP bounce detection: pending
-  session-start buffered in state, closed by the next event or a 10 s
-  event-time timeout (reference: RT/app/dwd/DwdTrafficUserJumpDetail.java:73-119;
-  matched ∪ timed-out first events).
-- :func:`upsert_sink` — K3 keyed last-writer-wins sink (upsert-kafka
-  equivalent; reference: RT/utils/MyKafkaUtil.java:112-121) as a
-  foreachBatch parquet MERGE.
+- :func:`keep_latest_stream` — D4/W6 keep-latest per key behind a 5 s
+  debounce timer (reference: RT/app/dws/DwsTradePaymentSucWindow.java:85-121).
+- :func:`jump_detect_stream` — D5 CEP bounce detection: the pending
+  session start, closed by the next event or a 10 s event-time timeout
+  (reference: RT/app/dwd/DwdTrafficUserJumpDetail.java:73-119).
+- :func:`uv_jump_contrib_stream` — D1 and D5 as one operator for the
+  3-stream union window job.
+- :func:`trailing_window_stream` — watermark-gated trailing RANGE-window
+  aggregate per key.
 
-Rows are processed in (ts, tiebreak) order inside each key group and the
-replay harness feeds time-ordered micro-batches, so the state transitions
-see the same event order as the reference's Kafka consumption.
+The batch window-function forms in :mod:`..operators.dedup` are the
+oracle in the stream==batch parity tests (tests/test_streaming.py). Rows
+reach each key in event order and the replay harness feeds time-ordered
+micro-batches, so the state transitions see the same event order as the
+reference's Kafka consumption.
+
+The rest of the module is the keyed upsert sink family: :func:`upsert_sink`
+(K3 upsert-kafka equivalent, reference: RT/utils/MyKafkaUtil.java:112-121)
+as a foreachBatch parquet MERGE, and its snapshot-isolated twin
+:func:`upsert_sink_snapshot` with readers, keyed delete, vacuum and export.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+import pickle
+from collections import defaultdict
+from collections.abc import Callable, Iterator
+from operator import itemgetter
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -34,67 +47,158 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
+KEYED_BUCKETS = 256  # hash buckets per keyed operator
+DEBOUNCE_BUCKETS = 2048  # the debounce keys on order ids, far more than mids
+EVENT_ORDER = ["ts", "event_id"]
+DEBOUNCE_MS = 5_000
+JUMP_GAP_MS = 10_000
 
-def _sorted_concat(pdfs: Iterator[pd.DataFrame], order: list[str]) -> pd.DataFrame:
-    chunks = [p for p in pdfs]
-    if not chunks:
-        return pd.DataFrame()
-    if len(chunks) == 1:
-        # common case: one Arrow batch per group — skip the concat copy
-        # (r13 optimization round; same sort, same rows)
-        return chunks[0].sort_values(order, kind="mergesort")
-    return pd.concat(chunks).sort_values(order, kind="mergesort")
+
+def _bucketed_keyed_state(
+    df: DataFrame,
+    keys: list[str],
+    order: list[str],
+    on_rows: Callable,
+    n_buckets: int,
+    out_schema: StructType | None = None,
+    watermark_col: str | None = None,
+    timer: Callable | None = None,
+    on_timer: Callable | None = None,
+) -> DataFrame:
+    """Run a per-key state machine over hash buckets of ``keys``.
+
+    One Python call per group per micro-batch is the floor of
+    ``applyInPandasWithState``, so the operator groups by a deterministic
+    bucket ``pmod(xxhash64(keys), n_buckets)`` and keeps every key's entry
+    in one pickled dict per bucket: a batch pays at most ``n_buckets``
+    Python calls and state puts instead of one per key. Per key it
+    behaves as a per-key operator would:
+
+    - the bucket's rows are sorted stably by ``order``, so each key sees
+      its rows in per-key sorted order with the same tie-breaks;
+    - ``on_rows(entry, rows, wm) -> (entry | None, out_rows)`` runs once
+      for each key with rows in the batch. ``entry`` is None for a key
+      without state and returning None drops the key. Rows are tuples
+      over the input columns other than ``watermark_col``; out rows are
+      tuples over ``out_schema`` (default: the same columns);
+    - with ``watermark_col`` (2 s delay), ``timer(entry)`` is the key's
+      event-time timer in ms, or None. Spark fires a per-key timer only
+      for keys without rows in the batch and only once
+      ``timer < watermark`` (strict); the kernel calls
+      ``on_timer(entry, wm) -> (entry | None, out_rows)`` for exactly those
+      keys, on data and timed-out calls alike, with the same watermark
+      (eventTimeWatermarkForEviction). The bucket's timeout sits at
+      ``max(wm, min(key timers))``, so it fires when its first key's would.
+
+    The state row also holds ``n_buckets``. The bucket count is not
+    frozen in the checkpoint the way shuffle partitions are, and a
+    restart with another count would route keys to buckets whose dict
+    never held them, so loading a row written with another count raises
+    ValueError.
+    """
+    own = df if watermark_col is None else df.drop(watermark_col)
+    in_cols = own.columns
+    out_schema = out_schema or own.schema
+    out_cols = [f.name for f in out_schema.fields]
+    key_of = itemgetter(*[in_cols.index(k) for k in keys])
+    state_schema = StructType(
+        [
+            StructField("n_buckets", IntegerType()),
+            StructField("entries", BinaryType()),
+        ]
+    )
+
+    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        entries = {}
+        if state.exists:
+            stored, blob = state.get
+            if stored != n_buckets:
+                raise ValueError(
+                    f"keyed state was checkpointed with n_buckets={stored}, "
+                    f"but this query uses n_buckets={n_buckets}; restart "
+                    "from a fresh checkpoint"
+                )
+            entries = pickle.loads(blob)
+        wm = state.getCurrentWatermarkMs() if watermark_col else None
+        groups = defaultdict(list)
+        chunks = [p for p in pdfs if len(p.index)]  # none on a timeout call
+        if chunks:
+            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+            pdf = pdf.sort_values(order, kind="mergesort")[in_cols]
+            for row in pdf.itertuples(index=False, name=None):
+                groups[key_of(row)].append(row)
+        out = []
+
+        def apply(k, result):
+            entry, emitted = result
+            if entry is None:
+                entries.pop(k, None)
+            else:
+                entries[k] = entry
+            out.extend(emitted)
+
+        for k, rows in groups.items():
+            apply(k, on_rows(entries.get(k), rows, wm))
+        if timer is not None:
+            for k, entry in list(entries.items()):
+                if k not in groups:
+                    t = timer(entry)
+                    if t is not None and t < wm:
+                        apply(k, on_timer(entry, wm))
+        if entries:
+            state.update((n_buckets, pickle.dumps(entries)))
+            if timer is not None:
+                timers = [t for t in map(timer, entries.values()) if t is not None]
+                if timers:
+                    state.setTimeoutTimestamp(max(wm, min(timers)))
+        elif state.exists:
+            state.remove()
+        if out:
+            yield pd.DataFrame(out, columns=out_cols)
+
+    if watermark_col is not None:
+        df = df.withWatermark(watermark_col, "2 seconds")
+    return (
+        df.withColumn(
+            "__bucket",
+            F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)),
+        )
+        .groupBy("__bucket")
+        .applyInPandasWithState(
+            fn,
+            out_schema,
+            state_schema,
+            "append",
+            GroupStateTimeout.EventTimeTimeout
+            if timer is not None
+            else GroupStateTimeout.NoTimeout,
+        )
+    )
 
 
 def first_per_day_stream(
-    df: DataFrame,
-    key: str = "mid",
-    dt_col: str = "dt",
-    order: list[str] | None = None,
-    n_buckets: int = 256,
+    df: DataFrame, key: str = "mid", dt_col: str = "dt"
 ) -> DataFrame:
-    """Emit each key's first row per calendar day (streaming D1).
+    """Emit each key's first row per calendar day (streaming D1); the
+    key's entry is the last emitted date."""
+    dt_i = df.columns.index(dt_col)
 
-    Bucketed grouping (r14 optimization round, same scheme as
-    :func:`keep_latest_stream`): groups are hash buckets of ``key``; the
-    pickled dict state maps key -> last emitted date. Rows are
-    bucket-sorted stably by ``order`` so each key's subsequence is the
-    per-key sorted order; the per-key last-date transition is unchanged,
-    so the emitted row set is identical.
-    """
-    import pickle
+    def on_rows(last, rows, wm):
+        out = []
+        for row in rows:
+            if row[dt_i] != last:
+                out.append(row)
+                last = row[dt_i]
+        return last, out
 
-    order = order or ["ts", "event_id"]
-    out_schema = df.schema
-    out_cols = [f.name for f in out_schema.fields]
-    state_schema = StructType([StructField("last_dts", BinaryType())])
-
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        pdf = _sorted_concat(pdfs, order)
-        if pdf.empty:
-            return
-        last = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        keep = []
-        for i, (k, row_dt) in enumerate(zip(pdf[key], pdf[dt_col])):
-            if row_dt != last.get(k):
-                keep.append(i)
-                last[k] = row_dt
-        state.update((pickle.dumps(last),))
-        yield pdf[out_cols].iloc[keep]
-
-    return (
-        df.withColumn("__bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
+    return _bucketed_keyed_state(df, [key], EVENT_ORDER, on_rows, KEYED_BUCKETS)
 
 
 def is_new_repair_stream(
@@ -102,53 +206,28 @@ def is_new_repair_stream(
     key: str = "mid",
     dt_col: str = "dt",
     is_new_col: str = "is_new",
-    order: list[str] | None = None,
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Repair the is_new flag with per-key first-visit-date state (P8).
 
-    State holds the first-visit date when the key's first event claimed
-    is_new=1, else the sentinel '' (visitor known old). is_new stays 1 only
-    while raw=1 and the event date equals the stored first-visit date.
-
-    Bucketed grouping (r14 optimization round, same scheme as
-    :func:`keep_latest_stream`): groups are hash buckets of ``key``; the
-    pickled dict state maps key -> first-visit date (or the '' sentinel).
-    The per-key transition below is unchanged.
+    The entry holds the first-visit date when the key's first event
+    claimed is_new=1, else the sentinel '' (visitor known old). is_new
+    stays 1 only while raw=1 and the event date equals the stored
+    first-visit date.
     """
-    import pickle
+    dt_i = df.columns.index(dt_col)
+    new_i = df.columns.index(is_new_col)
 
-    order = order or ["ts", "event_id"]
-    out_schema = df.schema
-    out_cols = [f.name for f in out_schema.fields]
-    state_schema = StructType([StructField("first_dts", BinaryType())])
-
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        pdf = _sorted_concat(pdfs, order)
-        if pdf.empty:
-            return
-        first = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        fixed = []
-        for k, raw, row_dt in zip(pdf[key], pdf[is_new_col], pdf[dt_col]):
-            first_dt = first.get(k)
+    def on_rows(first_dt, rows, wm):
+        out = []
+        for row in rows:
+            raw = row[new_i]
             if first_dt is None:
-                first_dt = row_dt if raw == "1" else ""
-                first[k] = first_dt
-            fixed.append("1" if (raw == "1" and row_dt == first_dt) else "0")
-        state.update((pickle.dumps(first),))
-        pdf = pdf[out_cols].assign(**{is_new_col: fixed})
-        yield pdf
+                first_dt = row[dt_i] if raw == "1" else ""
+            fixed = "1" if (raw == "1" and row[dt_i] == first_dt) else "0"
+            out.append(row[:new_i] + (fixed,) + row[new_i + 1:])
+        return first_dt, out
 
-    return (
-        df.withColumn("__bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-DEBOUNCE_MS = 5_000
+    return _bucketed_keyed_state(df, [key], EVENT_ORDER, on_rows, KEYED_BUCKETS)
 
 
 def keep_latest_stream(
@@ -156,7 +235,6 @@ def keep_latest_stream(
     keys: list[str],
     order_col: str,
     watermark_col: str = "rt",
-    n_buckets: int = 2048,
 ) -> DataFrame:
     """D4/W6 keep-LATEST per key with a 5 s debounce timer (reference:
     RT/app/dws/DwsTradePaymentSucWindow.java:85-121,
@@ -164,7 +242,8 @@ def keep_latest_stream(
     a burst anchors a timer 5 s out; rows arriving before it replace the
     buffered row if their ``order_col`` is newer; the timer emits the
     survivor and clears state — absorbing left-join retraction bursts
-    before the row is released downstream.
+    before the row is released downstream. The entry is
+    ``(buffered row, anchor ms)``.
 
     The reference's timer is processing-time; here it is EVENT-time
     (timeout at anchor + 5 s, fired by the watermark on
@@ -174,118 +253,34 @@ def keep_latest_stream(
     arrival-proximity IS event-proximity, so event time is the faithful
     bounded mapping — and makes emissions deterministic: one per (key,
     5 s burst), independent of how files split into micro-batches.
-
-    Bucketed grouping (r14 optimization round, guide §4.2/§2.3 "one
-    Python call per key per batch is the API floor — so group by fewer
-    keys"): the operator groups by a deterministic hash BUCKET of the
-    key (``pmod(xxhash64(keys), n_buckets)``) and keeps a dict of
-    per-key (buffered row, anchor) entries inside one pickled state
-    value, instead of one state row + one Python call per key. With
-    ~150 k order ids over 4 micro-batches the per-key form paid ~450 k
-    Python fn calls and state-store puts; the bucketed form pays
-    ``n_buckets`` per batch. Per-KEY semantics are unchanged:
-
-    - rows are bucket-sorted stably by ``order_col``, so each key's
-      subsequence is exactly the per-key sorted order (same tie-breaks);
-    - the per-key burst/anchor/keep-latest transitions below are the
-      r13 per-key loop verbatim;
-    - Spark fires a key's event-time timer when ``timeout < watermark``
-      (strict); the bucket keeps its timer at the MIN pending
-      ``anchor + 5 s`` and, on every call, emits exactly the keys with
-      ``anchor + 5 s < getCurrentWatermarkMs()`` — the same watermark
-      value (eventTimeWatermarkForEviction) the per-key firing predicate
-      used, so every key emits in the same micro-batch with the same
-      buffered row as the per-key form. Parity gates: the TWS
-      row-identity test, the split-invariance test, the anchor-semantics
-      test, and the registry oracle hash.
     """
-    import pickle
+    oc_i = df.drop(watermark_col).columns.index(order_col)
 
-    out_schema = df.drop(watermark_col).schema
-    out_cols = [f.name for f in out_schema.fields]
-    oc_i = out_cols.index(order_col)
-    key_is = [out_cols.index(k) for k in keys]
-    state_schema = StructType([StructField("pending", BinaryType())])
-
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        wm = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            pending = pickle.loads(bytes(state.get[0]))
-            done, keep = [], {}
-            for k, (best, anchor) in pending.items():
-                if anchor + DEBOUNCE_MS < wm:
-                    done.append(best)
-                else:
-                    keep[k] = (best, anchor)
-            if keep:
-                state.update((pickle.dumps(keep),))
-                state.setTimeoutTimestamp(
-                    max(wm, min(a + DEBOUNCE_MS for _, a in keep.values()))
-                )
-            else:
-                state.remove()
-            if done:
-                yield pd.DataFrame(done, columns=out_cols)
-            return
-        pending = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        rows = []
-        for pdf in pdfs:
-            if len(pdf.index):
-                rows.extend(pdf[out_cols].itertuples(index=False, name=None))
+    def on_rows(entry, rows, wm):
         done = []
-        touched = set()
-        if rows:
-            rows.sort(key=lambda r: r[oc_i])
-            for row in rows:
-                k = tuple(row[i] for i in key_is)
-                touched.add(k)
-                row_ms = int(row[oc_i]) * 1000
-                ent = pending.get(k)
-                if ent is None:
-                    pending[k] = (row, row_ms)
-                    continue
-                best, anchor = ent
-                if row_ms - anchor > DEBOUNCE_MS:
-                    done.append(best)  # burst closed in-stream
-                    pending[k] = (row, row_ms)
-                elif row[oc_i] >= best[oc_i]:
-                    pending[k] = (row, anchor)
-        if wm > 0 and len(touched) < len(pending):
-            # keys with no data this batch whose per-key timer would have
-            # fired (the per-key form's hasTimedOut call; suppressed here
-            # because the BUCKET received data).
-            for k in list(pending):
-                if k in touched:
-                    continue
-                best, anchor = pending[k]
-                if anchor + DEBOUNCE_MS < wm:
-                    done.append(best)
-                    del pending[k]
-        if pending:
-            state.update((pickle.dumps(pending),))
-            state.setTimeoutTimestamp(
-                max(wm, min(a + DEBOUNCE_MS for _, a in pending.values()))
-            )
-        else:
-            state.remove()
-        if done:
-            yield pd.DataFrame(done, columns=out_cols)
+        for row in rows:
+            row_ms = int(row[oc_i]) * 1000
+            if entry is None:
+                entry = (row, row_ms)
+                continue
+            best, anchor = entry
+            if row_ms - anchor > DEBOUNCE_MS:
+                done.append(best)  # burst closed in-stream
+                entry = (row, row_ms)
+            elif row[oc_i] >= best[oc_i]:
+                entry = (row, anchor)
+        return entry, done
 
-    return (
-        df.withWatermark(watermark_col, "2 seconds")
-        .withColumn(
-            "__bucket",
-            F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)),
-        )
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _bucketed_keyed_state(
+        df,
+        keys,
+        [order_col],
+        on_rows,
+        DEBOUNCE_BUCKETS,
+        watermark_col=watermark_col,
+        timer=lambda entry: entry[1] + DEBOUNCE_MS,
+        on_timer=lambda entry, wm: (None, [entry[0]]),
     )
-
-
-JUMP_GAP_MS = 10_000
 
 
 def jump_detect_stream(
@@ -294,124 +289,51 @@ def jump_detect_stream(
     ts_col: str = "ts",
     last_page_col: str = "last_page_id",
     watermark_col: str = "rt",
-    order: list[str] | None = None,
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Bounce detection (D5): a session start (last_page_id IS NULL) is a
     bounce unless a non-session-start event follows within 10 s.
 
-    The pending session start sits in keyed state with an event-time timeout
-    at pending_ts + 10 s; the watermark (driven by ``watermark_col``)
-    closes it when no successor arrives — the CEP ``within(10s)`` timeout
+    The entry is the pending session-start row, with an event-time timer
+    at its ts + 10 s; the watermark (driven by ``watermark_col``) closes
+    it when no successor arrives — the CEP ``within(10s)`` timeout
     side-output of the reference.
-
-    Bucketed grouping (r14 optimization round): same scheme as
-    :func:`keep_latest_stream` — groups are hash BUCKETS of ``key``, the
-    state is a pickled dict of per-key pending rows, the bucket timer
-    sits at the MIN pending ``ts + 10 s``, and on every call keys whose
-    per-key timer would have fired (``ts + 10 s < watermark``, the
-    per-key firing predicate verbatim) emit their pending row. Rows are
-    bucket-sorted stably by ``order`` so each key sees its rows in the
-    per-key order; the per-key transitions are the r13 loop verbatim.
     """
-    import pickle
+    cols = page.drop(watermark_col).columns
+    ts_i = cols.index(ts_col)
+    lp_i = cols.index(last_page_col)
 
-    order = order or [ts_col, "event_id"]
-    out_schema = page.drop(watermark_col).schema
-    out_cols = [f.name for f in out_schema.fields]
-    ts_i = out_cols.index(ts_col)
-    lp_i = out_cols.index(last_page_col)
-    key_i = out_cols.index(key)
-    sort_is = [out_cols.index(c) for c in order]
-    state_schema = StructType([StructField("pending", BinaryType())])
-
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        wm = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            pending = pickle.loads(bytes(state.get[0]))
-            done, keep = [], {}
-            for k, row in pending.items():
-                if int(row[ts_i]) + JUMP_GAP_MS < wm:
-                    done.append(row)
-                else:
-                    keep[k] = row
-            if keep:
-                state.update((pickle.dumps(keep),))
-                state.setTimeoutTimestamp(
-                    max(wm, min(int(r[ts_i]) + JUMP_GAP_MS for r in keep.values()))
-                )
-            else:
-                state.remove()
-            if done:
-                yield pd.DataFrame(done, columns=out_cols)
-            return
-        pending = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        rows = []
-        for pdf in pdfs:
-            if len(pdf.index):
-                rows.extend(pdf[out_cols].itertuples(index=False, name=None))
+    def on_rows(pending, rows, wm):
         bounces = []
-        touched = set()
-        if rows:
-            rows.sort(key=lambda r: tuple(r[i] for i in sort_is))
-            for row in rows:
-                k = row[key_i]
-                touched.add(k)
-                is_start = row[lp_i] is None or pd.isna(row[lp_i])
-                p = pending.get(k)
-                if p is not None:
-                    gap = row[ts_i] - p[ts_i]
-                    if gap > JUMP_GAP_MS:
-                        bounces.append(p)  # timed out in-stream
-                        if is_start:
-                            pending[k] = row
-                        else:
-                            del pending[k]
-                    elif is_start:
-                        bounces.append(p)  # matched: start -> start
-                        pending[k] = row
-                    else:
-                        del pending[k]  # successor page: not a bounce
-                elif is_start:
-                    pending[k] = row
-        if wm > 0:
-            for k in list(pending):
-                if k in touched:
-                    continue
-                row = pending[k]
-                if int(row[ts_i]) + JUMP_GAP_MS < wm:
-                    bounces.append(row)
-                    del pending[k]
-        if pending:
-            state.update((pickle.dumps(pending),))
-            state.setTimeoutTimestamp(
-                max(wm, min(int(r[ts_i]) + JUMP_GAP_MS for r in pending.values()))
-            )
-        else:
-            state.remove()
-        if bounces:
-            yield pd.DataFrame(bounces, columns=out_cols)
+        for row in rows:
+            is_start = row[lp_i] is None or pd.isna(row[lp_i])
+            # a pending start bounces when the gap times out in-stream or
+            # when the next event is another start; a successor page
+            # within 10 s clears it
+            if pending is not None and (
+                is_start or row[ts_i] - pending[ts_i] > JUMP_GAP_MS
+            ):
+                bounces.append(pending)
+            pending = row if is_start else None
+        return pending, bounces
 
-    return (
-        page.withWatermark(watermark_col, "2 seconds")
-        .withColumn("__bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    return _bucketed_keyed_state(
+        page,
+        [key],
+        [ts_col, "event_id"],
+        on_rows,
+        KEYED_BUCKETS,
+        watermark_col=watermark_col,
+        timer=lambda pending: int(pending[ts_i]) + JUMP_GAP_MS,
+        on_timer=lambda pending, wm: (None, [pending]),
     )
 
 
-def uv_jump_contrib_stream(
-    page: DataFrame,
-    watermark_col: str = "rt",
-    n_buckets: int = 256,
-) -> DataFrame:
+def uv_jump_contrib_stream(page: DataFrame, watermark_col: str = "rt") -> DataFrame:
     """Combined D1 + D5 keyed operator for the 3-stream union window job:
-    ONE applyInPandasWithState per mid computes both the first-visit-
-    per-day UV flag and CEP bounce detection, emitting rows pre-shaped as
-    union contributions ``(vc, ch, ar, is_new, ts, uv, sv, pv, dur,
-    uj)`` with uv=1 or uj=1.
+    ONE keyed pass per mid computes both the first-visit-per-day UV flag
+    and CEP bounce detection, emitting rows pre-shaped as union
+    contributions ``(vc, ch, ar, is_new, ts, uv, sv, pv, dur, uj)`` with
+    uv=1 or uj=1.
 
     The reference runs these as two separate Flink jobs over the same
     topic (RT/app/dwd/DwdTrafficUniqueVisitorDetail.java,
@@ -421,116 +343,141 @@ def uv_jump_contrib_stream(
     one shuffle on mid, one state store, both flags from the same sorted
     scan.
 
-    Bucketed grouping (r14 optimization round, same scheme as
-    :func:`keep_latest_stream`): groups are hash buckets of mid; the
-    pickled dict state maps mid -> [last_uv_dt, pending-5-tuple-or-None].
-    The bucket timer is the MIN pending ``ts + 10 s``; on every call,
-    un-touched keys whose per-key timer would have fired (strict
-    ``< watermark``) emit their bounce contribution and keep their UV
-    date alive — exactly the per-key form's timeout branch. An entry
-    whose parts are both None mirrors the per-key form's kept empty
-    state row.
+    The entry is ``(last UV date, pending start or None)``, where a
+    pending start is its ``(vc, ch, ar, is_new, ts)``. A fired bounce
+    timer keeps the UV date.
     """
-    import pickle
-
-    order = ["ts", "event_id"]
-    out_schema = (
-        "vc string, ch string, ar string, is_new string, ts long, "
-        "uv long, sv long, pv long, dur long, uj long"
-    )
-    out_cols = ["vc", "ch", "ar", "is_new", "ts", "uv", "sv", "pv", "dur", "uj"]
-    state_schema = StructType([StructField("pending", BinaryType())])
     in_cols = ["mid", "vc", "ch", "ar", "is_new", "ts", "event_id", "last_page_id", "dt"]
-    # tuple indexes into in_cols rows
-    MID, VC, CH, AR, ISN, TS, EID, LP, DT = range(9)
+    VC, TS, LP, DT = 1, 5, 7, 8  # tuple indexes into in_cols rows
+    out_schema = StructType(
+        [StructField(c, StringType()) for c in ("vc", "ch", "ar", "is_new")]
+        + [StructField(c, LongType()) for c in ("ts", "uv", "sv", "pv", "dur", "uj")]
+    )
 
     def contrib(p5, uv, uj):
-        # p5 = (vc, ch, ar, is_new, ts)
         return (*p5, uv, 0, 0, 0, uj)
 
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        wm = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            ent = pickle.loads(bytes(state.get[0]))
-            out = []
-            for k, (last_uv_dt, pend) in list(ent.items()):
-                if pend is not None and int(pend[4]) + JUMP_GAP_MS < wm:
-                    out.append(contrib(pend, 0, 1))
-                    if last_uv_dt is not None:
-                        ent[k] = (last_uv_dt, None)
-                    else:
-                        del ent[k]
-            _save(state, ent, wm)
-            if out:
-                yield pd.DataFrame(out, columns=out_cols)
-            return
-        ent = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        rows = []
-        for pdf in pdfs:
-            if len(pdf.index):
-                rows.extend(pdf[in_cols].itertuples(index=False, name=None))
+    def on_rows(entry, rows, wm):
+        last_uv_dt, pend = entry or (None, None)
         out = []
-        touched = set()
-        if rows:
-            rows.sort(key=lambda r: (r[TS], r[EID]))
-            for row in rows:
-                k = row[MID]
-                touched.add(k)
-                last_uv_dt, pend = ent.get(k, (None, None))
-                is_start = row[LP] is None or pd.isna(row[LP])
-                if is_start and row[DT] != last_uv_dt:
-                    out.append(contrib(row[VC:TS + 1], 1, 0))
-                    last_uv_dt = row[DT]
-                if pend is not None:
-                    gap = row[TS] - pend[4]
-                    if gap > JUMP_GAP_MS:
-                        out.append(contrib(pend, 0, 1))
-                        pend = row[VC:TS + 1] if is_start else None
-                    elif is_start:
-                        out.append(contrib(pend, 0, 1))
-                        pend = row[VC:TS + 1]
-                    else:
-                        pend = None
-                elif is_start:
-                    pend = row[VC:TS + 1]
-                ent[k] = (last_uv_dt, pend)
-        if wm > 0:
-            for k, (last_uv_dt, pend) in list(ent.items()):
-                if k in touched or pend is None:
-                    continue
-                if int(pend[4]) + JUMP_GAP_MS < wm:
-                    out.append(contrib(pend, 0, 1))
-                    if last_uv_dt is not None:
-                        ent[k] = (last_uv_dt, None)
-                    else:
-                        del ent[k]
-        _save(state, ent, wm)
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
+        for row in rows:
+            is_start = row[LP] is None or pd.isna(row[LP])
+            if is_start and row[DT] != last_uv_dt:
+                out.append(contrib(row[VC:TS + 1], 1, 0))
+                last_uv_dt = row[DT]
+            if pend is not None and (is_start or row[TS] - pend[4] > JUMP_GAP_MS):
+                out.append(contrib(pend, 0, 1))
+            pend = row[VC:TS + 1] if is_start else None
+        return (last_uv_dt, pend), out
 
-    def _save(state, ent, wm):
-        if not ent:
-            if state.exists:
-                state.remove()
-            return
-        state.update((pickle.dumps(ent),))
-        timers = [
-            int(pend[4]) + JUMP_GAP_MS
-            for _, pend in ent.values()
-            if pend is not None
-        ]
-        if timers:
-            state.setTimeoutTimestamp(max(wm, min(timers)))
+    def timer(entry):
+        pend = entry[1]
+        return None if pend is None else int(pend[4]) + JUMP_GAP_MS
 
-    return (
-        page.withWatermark(watermark_col, "2 seconds")
-        .withColumn("__bucket", F.pmod(F.xxhash64(F.col("mid")), F.lit(n_buckets)))
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    def on_timer(entry, wm):
+        last_uv_dt, pend = entry
+        kept = None if last_uv_dt is None else (last_uv_dt, None)
+        return kept, [contrib(pend, 0, 1)]
+
+    return _bucketed_keyed_state(
+        page.select(*in_cols, watermark_col),
+        ["mid"],
+        EVENT_ORDER,
+        on_rows,
+        KEYED_BUCKETS,
+        out_schema=out_schema,
+        watermark_col=watermark_col,
+        timer=timer,
+        on_timer=on_timer,
     )
 
+
+def _trunc_div(s: int, n: int) -> int:
+    """Integer division truncating toward zero (Spark DIV / DuckDB //
+    semantics; Python's // floors, which differs for negative sums)."""
+    q = abs(s) // n
+    return -q if s < 0 else q
+
+
+def trailing_window_stream(
+    df: DataFrame,
+    window_sec: int,
+    key: str = "user_id",
+    ts_col: str = "ts_s",
+    val_col: str = "v_micro",
+    watermark_col: str = "rt",
+) -> DataFrame:
+    """Watermark-correct ONLINE trailing time-window aggregate — the
+    feature-store shape ("user's count/sum/mean over the last hour")
+    as a keyed-state streaming operator with EXACT batch-RANGE-frame
+    semantics:
+
+    an event is emitted only once the watermark passes its timestamp,
+    so every frame member (peers at the same second included — RANGE
+    semantics) has provably arrived; the emitted aggregate therefore
+    equals the batch ``value_trailing_window`` row-for-row, and the
+    registry entry shares the batch entry's SQL oracle.
+
+    The entry is two bounded buffers: ``hist`` — (ts, v) pairs inside
+    the trailing window of any future event (pruned to
+    ``watermark - window_sec`` whenever the key is processed) — and
+    ``pend`` — rows newer than the watermark (bounded by one batch span
+    plus the watermark delay). The key's timer sits just past its newest
+    pending ts, which flushes keys that receive no further rows, and
+    then at ``last ts + window_sec`` to drop an idle key's entry — the
+    idle-TTL that keeps state on the ACTIVE key set, not the historical
+    one.
+    """
+    own = df.drop(watermark_col)
+    ts_i = own.columns.index(ts_col)
+    v_i = own.columns.index(val_col)
+    out_schema = StructType(
+        list(own.schema.fields)
+        + [
+            StructField("trail_n", LongType()),
+            StructField("trail_sum_micro", LongType()),
+            StructField("trail_avg_micro", LongType()),
+        ]
+    )
+
+    def flush(hist, pend, wm):
+        wm_s = wm // 1000
+        ready = [r for r in pend if r[ts_i] < wm_s]
+        out = []
+        if ready:
+            pend = [r for r in pend if r[ts_i] >= wm_s]
+            hist = hist + [(r[ts_i], r[v_i]) for r in ready]
+            for r in ready:
+                frame = [v for t, v in hist if r[ts_i] - window_sec <= t <= r[ts_i]]
+                total = sum(frame)
+                out.append((*r, len(frame), total, _trunc_div(total, len(frame))))
+        hist = [tv for tv in hist if tv[0] >= wm_s - window_sec]
+        return ((hist, pend) if hist or pend else None), out
+
+    def on_rows(entry, rows, wm):
+        hist, pend = entry or ([], [])
+        return flush(hist, pend + rows, wm)
+
+    def timer(entry):
+        hist, pend = entry
+        if pend:
+            return (max(r[ts_i] for r in pend) + 1) * 1000
+        return (max(t for t, _ in hist) + window_sec + 1) * 1000
+
+    return _bucketed_keyed_state(
+        df,
+        [key],
+        [ts_col],
+        on_rows,
+        KEYED_BUCKETS,
+        out_schema=out_schema,
+        watermark_col=watermark_col,
+        timer=timer,
+        on_timer=lambda entry, wm: flush(*entry, wm),
+    )
+
+
+# --- keyed upsert sinks -----------------------------------------------------
 
 N_UPSERT_BUCKETS = 16  # hash(key) % N partition dirs; a prod table sizes
 # this so one bucket ~ a few GB (e.g. 4096 at 100 TB) — the constant only
@@ -1449,142 +1396,6 @@ def _vacuum_locked(path: str, retain_versions: int, grace_s: float) -> list[str]
     return removed
 
 
-def _trunc_div(s: int, n: int) -> int:
-    """Integer division truncating toward zero (Spark DIV / DuckDB //
-    semantics; Python's // floors, which differs for negative sums)."""
-    q = abs(s) // n
-    return -q if s < 0 else q
-
-
-def trailing_window_stream(
-    df: DataFrame,
-    window_sec: int,
-    key: str = "user_id",
-    ts_col: str = "ts_s",
-    val_col: str = "v_micro",
-    watermark_col: str = "rt",
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Watermark-correct ONLINE trailing time-window aggregate — the
-    feature-store shape ("user's count/sum/mean over the last hour")
-    as a keyed-state streaming operator with EXACT batch-RANGE-frame
-    semantics:
-
-    an event is emitted only once the watermark passes its timestamp,
-    so every frame member (peers at the same second included — RANGE
-    semantics) has provably arrived; the emitted aggregate therefore
-    equals the batch ``value_trailing_window`` row-for-row, and the
-    registry entry shares the batch entry's SQL oracle.
-
-    State per key is two bounded buffers: ``hist`` — (ts, v) pairs
-    inside the trailing window of any future event (pruned to
-    ``watermark - window_sec`` on every call) — and ``pend`` — full
-    rows newer than the watermark (bounded by one batch span plus the
-    watermark delay). An event-time timeout set past the newest pending
-    ts flushes keys that receive no further batches, and a final
-    timeout at ``last_ts + window_sec`` self-cleans idle keys' state —
-    the idle-TTL a 100 TB deployment needs so state tracks the ACTIVE
-    key set, not the historical one.
-
-    Bucketed grouping (r14 optimization round, same scheme as
-    :func:`keep_latest_stream`): groups are hash buckets of ``key``; the
-    pickled dict state maps key -> [hist, pend]. A bucket call processes
-    EVERY key in the bucket with the current watermark — safe because
-    emission readiness (``ts < watermark``) and the emitted frame are
-    functions of (arrived rows, watermark) alone: a row's RANGE frame is
-    complete the moment the watermark passes its timestamp (any later
-    arrival with ts <= the row's ts would be dropped as late), so
-    processing a key earlier than its per-key timer would have fired
-    emits the same rows with the same aggregates. The bucket timer is
-    the MIN of the per-key timers (max pending ts + 1, or the idle-TTL
-    ``max hist ts + window + 1``).
-    """
-    import pickle
-
-    out_fields = [f for f in df.schema.fields if f.name != watermark_col]
-    out_schema = StructType(
-        list(out_fields)
-        + [
-            StructField("trail_n", LongType()),
-            StructField("trail_sum_micro", LongType()),
-            StructField("trail_avg_micro", LongType()),
-        ]
-    )
-    out_cols = [f.name for f in out_fields]
-    state_schema = StructType([StructField("pending", BinaryType())])
-
-    def fn(bucket_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        ent = pickle.loads(bytes(state.get[0])) if state.exists else {}
-        if not state.hasTimedOut:
-            pdf = _sorted_concat(pdfs, [ts_col])
-            if not pdf.empty:
-                for rec in pdf[out_cols].to_dict("records"):
-                    rec = {
-                        k: (v.item() if hasattr(v, "item") else v)
-                        for k, v in rec.items()
-                    }
-                    e = ent.get(rec[key])
-                    if e is None:
-                        ent[rec[key]] = e = [[], []]
-                    e[1].append(rec)
-        wm_s = state.getCurrentWatermarkMs() // 1000
-        out = []
-        drop = []
-        for k, (hist, pend) in ent.items():
-            pend.sort(key=lambda r: (r[ts_col], str(r)))
-            ready = [r for r in pend if r[ts_col] < wm_s]
-            pend = [r for r in pend if r[ts_col] >= wm_s]
-            if ready:
-                values = hist + [[r[ts_col], r[val_col]] for r in ready]
-                for r in ready:
-                    lo = r[ts_col] - window_sec
-                    frame = [v for t, v in values if lo <= t <= r[ts_col]]
-                    row = dict(r)
-                    row["trail_n"] = len(frame)
-                    row["trail_sum_micro"] = sum(frame)
-                    row["trail_avg_micro"] = _trunc_div(sum(frame), len(frame))
-                    out.append(row)
-                hist = [tv for tv in values if tv[0] >= wm_s - window_sec]
-            else:
-                hist = [tv for tv in hist if tv[0] >= wm_s - window_sec]
-            if pend or hist:
-                ent[k] = [hist, pend]
-            else:
-                drop.append(k)
-        for k in drop:
-            del ent[k]
-        if ent:
-            state.update((pickle.dumps(ent),))
-            tmr = min(
-                (max(r[ts_col] for r in p) + 1)
-                if p
-                else (max(t for t, _ in h) + window_sec + 1)
-                for h, p in ent.values()
-            )
-            state.setTimeoutTimestamp(
-                max(state.getCurrentWatermarkMs(), tmr * 1000)
-            )
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out)[[f.name for f in out_schema.fields]]
-
-    return (
-        df.withWatermark(watermark_col, "2 seconds")
-        .withColumn(
-            "__bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-        )
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 def read_upsert_snapshot_lookup(
     spark,
     path: str,
@@ -1646,162 +1457,3 @@ def read_upsert_snapshot_lookup(
         c = F.col(k) == F.lit(v)
         cond = c if cond is None else cond & c
     return df.filter(cond).drop("__bucket")
-
-
-def first_per_day_stream_tws(
-    df: "DataFrame",
-    key: str = "mid",
-    dt_col: str = "dt",
-    order: list[str] | None = None,
-) -> "DataFrame":
-    """D1 first-visit-per-day dedup on ``transformWithStateInPandas`` —
-    Spark 4's arbitrary-stateful-processing API and the forward path for
-    every operator this module implements on the older
-    ``applyInPandasWithState`` (named state variables, native timers,
-    per-state TTL instead of one blob + one query-wide timeout). Same
-    semantics as :func:`first_per_day_stream`; the pytest gate proves
-    the two APIs emit identical rows over the same replay, so migrating
-    an operator is a mechanical swap, not a semantics review.
-
-    State here is ONE ValueState holding the key's last-seen date — the
-    same single-cell bound as the old form (RocksDB-backed, keyed by
-    the dedup key), so the 100 TB posture is unchanged.
-
-    Runtime dependency: the transformWithState state-server protocol
-    speaks protobuf between the JVM and the Python worker; environments
-    without ``google.protobuf`` (this sandbox) fail at stream start with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE — the parity gate
-    (test_transform_with_state_matches_apply_in_pandas_with_state)
-    importorskips on it. Any real cluster ships protobuf.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    order = order or ["ts", "event_id"]
-    out_schema = df.schema
-
-    class FirstPerDay(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_dt", "last_dt string")
-
-        def handleInputRows(self, key_, rows, timerValues):
-            pdf = _sorted_concat(rows, order)
-            if pdf.empty:
-                return
-            last_dt = self._last.get()[0] if self._last.exists() else None
-            keep = []
-            for i, row_dt in enumerate(pdf[dt_col]):
-                if row_dt != last_dt:
-                    keep.append(i)
-                    last_dt = row_dt
-            self._last.update((last_dt,))
-            yield pdf.iloc[keep]
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key).transformWithStateInPandas(
-        FirstPerDay(), out_schema, "append", "None"
-    )
-
-
-def keep_latest_stream_tws(
-    df: "DataFrame",
-    keys: list[str],
-    order_col: str,
-    watermark_col: str = "rt",
-) -> "DataFrame":
-    """D4/W6 keep-latest + 5 s debounce on ``transformWithStateInPandas``
-    — the JVM-managed-state port of :func:`keep_latest_stream` (reference
-    timers: RT/app/dws/DwsTradePaymentSucWindow.java:102,
-    RT/app/dws/DwsTradeProvinceOrderWindow.java:102-103) and the
-    scale-path answer to the replay lane's one `weak`: the old API holds
-    state as one JSON blob and re-enters Python for every (key,
-    micro-batch) pair through a query-wide timeout mode, while this form
-    keeps the buffered row in a typed ValueState and fires NATIVE
-    per-key event-time timers (``handle.registerTimer``), so state
-    bookkeeping stays JVM-side and Python is entered only for keys with
-    actual input rows or an expired timer.
-
-    Semantics are identical to :func:`keep_latest_stream` by
-    construction (same anchor/burst/emit rules; the parity gate
-    ``test_keep_latest_tws_matches_apply_in_pandas_with_state`` proves
-    row-identical output over the same replay). Timer rules mirrored:
-    the FIRST row of a burst anchors a timer at ``anchor + 5 s``; newer
-    rows inside the window replace the buffered row without moving the
-    timer; a row past the window closes the burst in-stream, emits the
-    survivor, and re-anchors (deleting the stale timer so the old
-    firing cannot double-emit).
-
-    Runtime dependency: protobuf (the transformWithState state-server
-    protocol) — absent in this sandbox, present on any real cluster;
-    the parity test importorskips exactly like the D1 port above.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    out_schema = df.drop(watermark_col).schema
-    out_cols = [f.name for f in out_schema.fields]
-    state_ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in out_schema.fields
-    )
-
-    class KeepLatestDebounce(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._best = handle.getValueState("best", state_ddl)
-            self._anchor = handle.getValueState("anchor", "anchor_ms long")
-
-        def handleInputRows(self, key_, rows, timerValues: TimerValues):
-            pdf = _sorted_concat(rows, [order_col])
-            if pdf.empty:
-                return
-            best = anchor = None
-            if self._anchor.exists():
-                anchor = self._anchor.get()[0]
-                best = dict(zip(out_cols, self._best.get()))
-            done = []
-            for row in pdf[out_cols].to_dict("records"):
-                row_ms = int(row[order_col]) * 1000
-                if best is None:
-                    best, anchor = row, row_ms
-                    self._handle.registerTimer(anchor + DEBOUNCE_MS)
-                elif row_ms - anchor > DEBOUNCE_MS:
-                    done.append(best)  # burst closed in-stream
-                    self._handle.deleteTimer(anchor + DEBOUNCE_MS)
-                    best, anchor = row, row_ms
-                    self._handle.registerTimer(anchor + DEBOUNCE_MS)
-                elif row[order_col] >= best[order_col]:
-                    best = row  # replace inside the window; timer stays
-            self._best.update(tuple(best[c] for c in out_cols))
-            self._anchor.update((anchor,))
-            if done:
-                yield pd.DataFrame(done)[out_cols]
-
-        def handleExpiredTimer(
-            self, key_, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ):
-            if self._anchor.exists():
-                # a re-anchor deletes its stale timer, so any firing
-                # timer IS the live burst's — emit and clear.
-                best = dict(zip(out_cols, self._best.get()))
-                self._best.clear()
-                self._anchor.clear()
-                yield pd.DataFrame([best])[out_cols]
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.withWatermark(watermark_col, "2 seconds")
-        .groupBy(*keys)
-        .transformWithStateInPandas(
-            KeepLatestDebounce(), out_schema, "append", "EventTime"
-        )
-    )

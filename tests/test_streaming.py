@@ -278,22 +278,13 @@ def test_late_rows_dropped_by_watermark(spark):
         ), "late duplicates leaked into closed windows"
 
 
-def test_debounce_emissions_split_invariant(spark):
-    """The D4 debounce's oracle registration rests on determinism: the
-    emission multiset must not depend on how the replay splits into
-    micro-batches. Re-run the same input as 2 files and as 6 and compare."""
-    from pyspark.sql import functions as F
-
+def _debounce_emissions(spark):
     from flink_realtime_datawarehouse_v3_spark.sources import cdc
     from flink_realtime_datawarehouse_v3_spark.streaming.core import (
         TempStreamDir,
         read_stream,
         run_to_memory,
     )
-    from flink_realtime_datawarehouse_v3_spark.streaming.pipelines import (
-        _write_replay,
-    )
-    from flink_realtime_datawarehouse_v3_spark.streaming import pipelines as sp_mod
     from flink_realtime_datawarehouse_v3_spark.streaming.stateful import (
         keep_latest_stream,
     )
@@ -311,27 +302,57 @@ def test_debounce_emissions_split_invariant(spark):
         )
         for dt in (3600, 7200)
     ]
+    with TempStreamDir() as d:
+        sp._write_replay(flat, d.sub("in"), order_by=["ts"], sentinels=sents)
+        s = read_stream(spark, d.sub("in")).withColumn(
+            "rt", F.to_timestamp(F.from_unixtime("ts"))
+        )
+        out = keep_latest_stream(s, keys=["id"], order_col="ts").filter(
+            F.col("id") != "__sentinel__"
+        )
+        return run_to_memory(out, output_mode="append").collect()
+
+
+@pytest.mark.parametrize(
+    "entry", ["debounce", "jump_detail", "traffic_union_window"]
+)
+def test_debounce_emissions_split_invariant(spark, monkeypatch, entry):
+    """The timer-driven keyed operators' oracle registrations rest on
+    determinism: the emission multiset must not depend on how the replay
+    splits into micro-batches. Re-run the same input as 2 files and as 6
+    and compare: the D4 debounce, the D5 bounce detail, and the union
+    window fed by the combined D1 + D5 operator."""
+    import glob
+    import json
+    import os
+
+    run_entry = {
+        "debounce": lambda: _debounce_emissions(spark),
+        "jump_detail": lambda: sp.stream_jump_detail(spark, SF_SMOKE).collect(),
+        "traffic_union_window": lambda: sp.stream_traffic_union_window(
+            spark, SF_SMOKE
+        ).collect(),
+    }[entry]
+    write_replay = sp._write_replay
+    batches = []
+
+    def counting_write_replay(df, path, *args, **kwargs):
+        write_replay(df, path, *args, **kwargs)
+        with open(os.path.join(path, "_replay_meta.json")) as f:
+            fpb = json.load(f)["files_per_trigger"]
+        batches.append(len(glob.glob(os.path.join(path, "part-*.parquet"))) // fpb)
+
+    monkeypatch.setattr(sp, "_write_replay", counting_write_replay)
 
     def run(n_files):
-        saved = sp_mod.N_FILES
-        sp_mod.N_FILES = n_files
-        try:
-            with TempStreamDir() as d:
-                _write_replay(flat, d.sub("in"), order_by=["ts"], sentinels=sents)
-                s = read_stream(spark, d.sub("in")).withColumn(
-                    "rt", F.to_timestamp(F.from_unixtime("ts"))
-                )
-                out = keep_latest_stream(s, keys=["id"], order_col="ts").filter(
-                    F.col("id") != "__sentinel__"
-                )
-                return sorted(
-                    tuple("" if v is None else str(v) for v in r)
-                    for r in run_to_memory(out, output_mode="append").collect()
-                )
-        finally:
-            sp_mod.N_FILES = saved
+        monkeypatch.setattr(sp, "N_FILES", n_files)
+        return sorted(
+            tuple("" if v is None else str(v) for v in r) for r in run_entry()
+        )
 
-    assert run(2) == run(6)
+    two, six = run(2), run(6)
+    assert batches == [2, 6], batches  # the split really changed
+    assert two and two == six
 
 
 def test_debounce_anchor_semantics_typed_state(spark, tmp_path):
@@ -884,7 +905,9 @@ def test_stateful_hot_key_bounded_state(spark, tmp_path):
     # from the keys with the operator's own bucket expression
     n_buckets_occupied = (
         df.select(
-            F.pmod(F.xxhash64(F.col("mid")), F.lit(256)).alias("b")
+            F.pmod(
+                F.xxhash64(F.col("mid")), F.lit(stateful.KEYED_BUCKETS)
+            ).alias("b")
         )
         .distinct()
         .count()
@@ -898,6 +921,49 @@ def test_stateful_hot_key_bounded_state(spark, tmp_path):
     want = {(r.mid, r.dt) for r in df.groupBy("mid", "dt").count().collect()}
     assert got == want  # exactly one emission per (key, day)
     assert spark.table("hot_key_gate").count() == len(want)
+
+
+def test_keyed_state_resume_with_other_bucket_count_raises(
+    spark, tmp_path, monkeypatch
+):
+    """The bucketed keyed operators pin their bucket count in the
+    checkpointed state. A resume with the same count carries the state on
+    (no key re-emits its day); a resume with another count fails loudly
+    instead of routing keys to buckets whose state never held them, where
+    they would emit their day again."""
+    from pyspark.errors import StreamingQueryException
+
+    from flink_realtime_datawarehouse_v3_spark.streaming import core, stateful
+
+    schema = "mid string, dt string, ts long, event_id string"
+    inp, chk, sink = (str(tmp_path / d) for d in ("in", "chk", "sink"))
+
+    def resume(n_buckets, lo):
+        spark.createDataFrame(
+            [(f"m{i}", "2024-01-01", lo + i, f"e{lo + i}") for i in range(50)],
+            schema,
+        ).coalesce(1).write.mode("append").parquet(inp)
+        monkeypatch.setattr(stateful, "KEYED_BUCKETS", n_buckets)
+        q = (
+            stateful.first_per_day_stream(
+                core.read_stream(spark, inp, schema=schema)
+            )
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", chk)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            assert q.awaitTermination(180)
+        finally:
+            q.stop()
+        return spark.read.parquet(sink).count()
+
+    assert resume(16, 1_000) == 50
+    assert resume(16, 2_000) == 50  # same count: no key re-emits its day
+    with pytest.raises(StreamingQueryException, match="n_buckets=16"):
+        resume(8, 3_000)
 
 
 def test_upsert_snapshot_sink_mvcc(spark, tmp_path):
@@ -1524,111 +1590,6 @@ def test_statestore_reader_inspects_checkpointed_state(spark, tmp_path):
         .count()
     )
     assert len(state) * 5 < n_orders, (len(state), n_orders)
-
-
-def test_transform_with_state_matches_apply_in_pandas_with_state(spark):
-    """API migration gate: the D1 first-visit dedup ported to Spark 4's
-    transformWithStateInPandas must emit exactly the rows of the
-    applyInPandasWithState form over the same replay (and both equal
-    the batch D1 entry) — migrating operators to the new API (named
-    state vars, native timers, per-state TTL) is a mechanical swap, not
-    a semantics review. Skipped where protobuf is unavailable: the
-    transformWithState state-server protocol requires it (this
-    container ships without it; any real cluster has it)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state server needs protobuf",
-    )
-    from pyspark.sql import functions as F
-
-    from flink_realtime_datawarehouse_v3_spark.streaming import (
-        pipelines as _p,
-        stateful,
-    )
-    from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
-        read_stream,
-        run_to_memory,
-    )
-
-    page = _p._page_log(spark, SF_SMOKE)
-    outs = []
-    for form in (stateful.first_per_day_stream, stateful.first_per_day_stream_tws):
-        with TempStreamDir() as d:
-            _p._write_replay(page, d.sub("in"), order_by=["ts"])
-            s = (
-                read_stream(spark, d.sub("in"))
-                .filter(F.col("last_page_id").isNull())
-                .withColumn(
-                    "dt",
-                    F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd"),
-                )
-            )
-            out = run_to_memory(
-                form(s, key="mid", dt_col="dt"), output_mode="append"
-            ).drop("dt")
-            outs.append(sorted(map(str, out.collect())))
-    assert outs[0] == outs[1] and len(outs[0]) > 0
-    batch = api.QUERIES["dwd_traffic_unique_visitor_detail"](spark, SF_SMOKE)
-    assert outs[1] == sorted(map(str, batch.collect()))
-
-
-def test_keep_latest_tws_matches_apply_in_pandas_with_state(spark):
-    """API migration gate for D4/W6 (r12): the keep-latest + 5 s debounce
-    ported to transformWithStateInPandas (typed ValueStates + NATIVE
-    per-key event-time timers) must emit exactly the rows of the
-    applyInPandasWithState form over the same replay — the scale path
-    for the streaming lane's one `weak` entry (per-key Python
-    invocations) is a mechanical swap, not a semantics review. Skipped
-    where protobuf is unavailable (the transformWithState state server
-    needs it; this container ships without it, real clusters have it)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state server needs protobuf",
-    )
-    from pyspark.sql import functions as F
-
-    from flink_realtime_datawarehouse_v3_spark.sources import cdc
-    from flink_realtime_datawarehouse_v3_spark.streaming import (
-        pipelines as _p,
-        stateful,
-    )
-    from flink_realtime_datawarehouse_v3_spark.streaming.core import (
-        TempStreamDir,
-        read_stream,
-        run_to_memory,
-    )
-
-    flat = cdc.topic_db(spark, SF_SMOKE, only=["order_info"]).select(
-        F.col("data").getItem("id").alias("id"),
-        F.col("data").getItem("order_status").alias("order_status"),
-        F.col("ts").cast("long").alias("ts"),
-    )
-
-    def sents(mx: int) -> list:
-        return [
-            spark.createDataFrame(
-                [("__sentinel__", None, mx + dt)],
-                "id string, order_status string, ts long",
-            )
-            for dt in (3600, 7200)
-        ]
-
-    outs = []
-    for form in (stateful.keep_latest_stream, stateful.keep_latest_stream_tws):
-        with TempStreamDir() as d:
-            _p._write_replay(
-                flat, d.sub("in"), order_by=["ts"], sentinels=sents,
-                max_col="ts", n_files=2,
-            )
-            s = read_stream(spark, d.sub("in")).withColumn(
-                "rt", F.to_timestamp(F.from_unixtime("ts"))
-            )
-            out = form(s, keys=["id"], order_col="ts").filter(
-                F.col("id") != "__sentinel__"
-            )
-            outs.append(sorted(map(str, run_to_memory(out).collect())))
-    assert outs[0] == outs[1] and len(outs[0]) > 0
 
 
 def test_pyds_stream_offset_recovery(spark, tmp_path):
